@@ -145,8 +145,8 @@ def _kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_linked_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kg_linked_triples under the opt-in fixed-width minted-id mode
-    (kg/link.py HASHED_MINT_CONF) — proves the hashed mint stays in
+    """kg_linked_triples with fixed-width minted ids
+    (link_triples(hashed_ids=True)) — proves the hashed mint stays in
     lockstep with an independent SQL engine's md5."""
     from pyspark.sql import functions as F
 
@@ -464,7 +464,7 @@ def _kg_sql_fragments(p: dict[str, str]) -> dict[str, str]:
       SELECT 'edit:kg-pipeline', 'InstanceEdit|Entity',
              'kg-importer, 2025-03-01 00:00:00', 'InstanceEdit')
     """
-    # hashed-minted-id variant (spark.kg.link.hashedMintedIds): identical
+    # hashed-minted-id variant (link_triples(hashed_ids=True)): identical
     # except the miss branch mints fixed-width 'new:' || md5(key)
     link_hashed = link.replace(
         "'new:' || k.sk", "'new:' || md5(k.sk)"

@@ -197,7 +197,7 @@ def main() -> None:
         # path has no python worker and ignores it.
         extra["spark.kg.extract.partitions"] = str(max(2, cpus // 2))
     # A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" injects arbitrary confs
-    # (e.g. spark.kg.materialize.encodeIds=false for a control run).
+    # (e.g. spark.kg.extract.impl=sql for a control run).
     # ';'-separated — ',' collides with multi-flag values like
     # spark.executor.extraJavaOptions (ADVICE r4); ','-separated input
     # still parses when no value contains a comma (legacy invocations).

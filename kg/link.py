@@ -11,6 +11,11 @@ per-row SQLite probe loop; here it is ONE declarative join:
     hit  ⇒ catalog entity_id        (ambiguity resolved min(entity_id))
     miss ⇒ minted deterministic id  ("new:<key>" / "tool:<name>")
 
+hashed_ids=True mints fixed-width "new:" + md5(key) instead.  The
+pipeline never sets it (it lost the 8M-corpus A/B, BENCH/BASELINE.md
+round 6); it stays an explicit argument because the
+kg_linked_triples_hashed contract entry pins the md5 mint.
+
 The catalog is a dimension (≪ probe side) ⇒ broadcast hash join: zero
 shuffle of the 10^12-row probe side, and broadcast is inherently
 skew-immune (a Zipfian-hot key never concentrates on one reducer because
@@ -29,13 +34,6 @@ from kg.extract import TOOL_SURFACE_PREFIX
 
 MINTED_PREFIX = "new:"
 TOOL_ENTITY_PREFIX = "tool:"
-# Opt-in fixed-width minted ids ("new:" + md5 hex, 36 chars) instead of
-# "new:" + normalized surface (unbounded).  The surface is carried once in
-# the vocabulary dim (link_vocab) for node display names; every downstream
-# exchange (link rejoins → CC → materialize) then moves a fixed 36-byte id
-# instead of arbitrary-length text.  Measured on the 8M corpus before
-# defaulting — see BENCH/BASELINE.md round 5.
-HASHED_MINT_CONF = "spark.kg.link.hashedMintedIds"
 
 
 def norm_key(col: Column) -> Column:
@@ -83,20 +81,12 @@ def _mint(key_col: Column, catalog_id: Column, hashed: bool = False) -> Column:
     )
 
 
-def _resolve_hashed(df: DataFrame, hashed_ids: bool | None) -> bool:
-    if hashed_ids is not None:
-        return hashed_ids
-    return (
-        str(df.sparkSession.conf.get(HASHED_MINT_CONF, "false")).lower() == "true"
-    )
-
-
 def link_surfaces(
     surfaces: DataFrame,
     catalog: DataFrame,
     surface_col: str = "surface",
     broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
+    hashed_ids: bool = False,
 ) -> DataFrame:
     """Probe (J3): map each distinct surface to an entity_id.
 
@@ -111,7 +101,6 @@ def link_surfaces(
     """
     from kg.canonicalize import _fits_broadcast
 
-    hashed = _resolve_hashed(surfaces, hashed_ids)
     index = build_link_index(catalog)
     aliases = catalog.select(F.explode("aliases").alias("a"))
     if _fits_broadcast(aliases, broadcast_threshold):
@@ -122,28 +111,8 @@ def link_surfaces(
     return joined.select(
         "surface",
         "blocking_key",
-        _mint(F.col("blocking_key"), F.col("entity_id"), hashed).alias("entity_id"),
+        _mint(F.col("blocking_key"), F.col("entity_id"), hashed_ids).alias("entity_id"),
         F.col("entity_id").isNull().alias("is_minted"),
-    )
-
-
-def link_vocab(
-    raw_triples: DataFrame,
-    catalog: DataFrame,
-    broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
-) -> DataFrame:
-    """The (surface, blocking_key, entity_id, is_minted) vocabulary of a
-    raw-triple stream — the dim that lets hashed minted ids stay
-    resolvable to a display surface (build_nodes minted_names).  Pass the
-    result to link_triples(surface_map=...) so the linking work happens
-    once."""
-    surf = (
-        raw_triples.select(F.col("subj_surface").alias("surface"))
-        .unionByName(raw_triples.select(F.col("obj_surface").alias("surface")))
-    )
-    return link_surfaces(
-        surf, catalog, broadcast_threshold=broadcast_threshold, hashed_ids=hashed_ids
     )
 
 
@@ -151,8 +120,7 @@ def link_triples(
     raw_triples: DataFrame,
     catalog: DataFrame,
     broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
-    surface_map: DataFrame | None = None,
+    hashed_ids: bool = False,
 ) -> DataFrame:
     """Rewrite raw surface triples to entity-id triples.
 
@@ -167,18 +135,12 @@ def link_triples(
     # the DISTINCT vocabulary (each key once ⇒ no probe-side skew to
     # salt), and its index side is already gated inside link_surfaces.
     # link_surfaces_salted remains for callers probing NON-distinct
-    # surface streams with Zipfian keys.  A caller that already holds the
-    # vocabulary (link_vocab — e.g. the hashed-id pipeline, which also
-    # feeds it to build_nodes) passes it in to avoid recomputing.
-    mapped = (
-        surface_map
-        if surface_map is not None
-        else link_vocab(
-            raw_triples,
-            catalog,
-            broadcast_threshold=broadcast_threshold,
-            hashed_ids=hashed_ids,
-        )
+    # surface streams with Zipfian keys.
+    surf = raw_triples.select(F.col("subj_surface").alias("surface")).unionByName(
+        raw_triples.select(F.col("obj_surface").alias("surface"))
+    )
+    mapped = link_surfaces(
+        surf, catalog, broadcast_threshold=broadcast_threshold, hashed_ids=hashed_ids
     )
     # persist + EAGER fill: the map feeds TWO exchanges (subj + obj) whose
     # plans differ by rename, so ReuseExchange can't kick in; worse,
@@ -235,7 +197,7 @@ def link_surfaces_salted(
     catalog: DataFrame,
     surface_col: str = "surface",
     salt_buckets: int = 16,
-    hashed_ids: bool | None = None,
+    hashed_ids: bool = False,
 ) -> DataFrame:
     """Salted shuffle hash join: probe side gets salt = pmod(xxhash64(row
     identity), K); build side is exploded ×K so every (key, salt) pair
@@ -245,7 +207,6 @@ def link_surfaces_salted(
     Produces the same (surface → entity_id) mapping as link_surfaces —
     asserted by tests/test_link.py::test_salted_equals_broadcast.
     """
-    hashed = _resolve_hashed(surfaces, hashed_ids)
     index = build_link_index(catalog)
     salted_index = index.withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
@@ -262,7 +223,7 @@ def link_surfaces_salted(
     return joined.select(
         "surface",
         "blocking_key",
-        _mint(F.col("blocking_key"), F.col("entity_id"), hashed).alias("entity_id"),
+        _mint(F.col("blocking_key"), F.col("entity_id"), hashed_ids).alias("entity_id"),
         F.col("entity_id").isNull().alias("is_minted"),
     )
 
@@ -273,8 +234,6 @@ __all__ = [
     "link_surfaces",
     "link_surfaces_salted",
     "link_triples",
-    "link_vocab",
     "MINTED_PREFIX",
     "TOOL_ENTITY_PREFIX",
-    "HASHED_MINT_CONF",
 ]

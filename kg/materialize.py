@@ -40,9 +40,7 @@ REVERSED_PREDICATES = {"produced_by": "produces"}
 RUN_TS = dt.datetime(2025, 3, 1, 0, 0, 0)  # deterministic provenance stamp
 
 
-def build_edges(
-    canonical_triples: DataFrame, encode_ids: bool | None = None
-) -> DataFrame:
+def build_edges(canonical_triples: DataFrame) -> DataFrame:
     """canonical (subj, pred, obj) stream → aggregated edge table.
 
     Order of operations (mirrors the reference):
@@ -52,48 +50,8 @@ def build_edges(
       4. A1 stoichiometry agg          (one shuffle on (src, rel, dst);
          partial aggregation collapses duplicates map-side first)
       5. W1 order rank                 (window on (src, rel))
-
-    Surrogate-id encoding (VERDICT r3 item 1, measured and REJECTED as
-    the default — BENCH/BASELINE.md round 4): with ``encode_ids`` the
-    hot exchanges move a 96-bit surrogate instead of entity-id strings:
-    src/dst are replaced map-side by (xxhash64, murmur3) column pairs,
-    the agg and the order window run on those 12-byte keys, and the
-    strings rejoin afterward from a distinct (hash → id) dictionary.
-    dst is decoded BEFORE the window (the W1 tiebreak orders by the dst
-    STRING), src after — the window partitions by the src surrogate,
-    which clusters identically.  Results are bit-identical to the plain
-    path (tests); the composite 96-bit key makes a collision (two ids
-    sharing BOTH hashes) P ≈ n²/2⁹⁷ — ~6·10⁻⁶ at 10¹² distinct ids, so
-    no runtime collision check is paid.
-
-    Measured verdict (8M-corpus fresh-JVM A/B, same day): the exchange
-    savings do NOT pay for the dictionary scan + two decode joins on a
-    single host — materialize stage wall 19.4→29.7s at 8 cores and
-    10.4→25.0s at 32 (the extra work loses even where the memory bus is
-    idle, so this is genuine added work, not contention).  Unlike the
-    extract explode-first fix, the string bytes here are NOT redundant
-    per row — each partial-agg row is already a distinct edge — so
-    hashing trades one pass of string bytes in the exchange for a full
-    extra pass over the input plus join passes over the edges.  The
-    plain path is therefore the default at every size;
-    ``spark.kg.materialize.encodeIds=true`` (or ``auto`` with a row
-    threshold) remains for deployments whose shuffle crosses a real
-    network, where exchange bytes cost more than local scan bytes.
     """
-    spark = canonical_triples.sparkSession
-    if encode_ids is None:
-        mode = spark.conf.get("spark.kg.materialize.encodeIds", "false").lower()
-        if mode == "auto":
-            thr = int(
-                spark.conf.get("spark.kg.materialize.encodeThresholdRows", "2000000")
-            )
-            encode_ids = canonical_triples.limit(thr + 1).count() > thr
-        else:
-            encode_ids = mode == "true"
-    t = _normalize_triples(canonical_triples)
-    if encode_ids:
-        return _edges_from_encoded(t)
-    return finalize_edge_state(_edge_state_agg(t))
+    return finalize_edge_state(edge_partials(canonical_triples))
 
 
 def _normalize_triples(canonical_triples: DataFrame) -> DataFrame:
@@ -186,74 +144,6 @@ def finalize_edge_state(state: DataFrame) -> DataFrame:
     )
 
 
-def _edges_from_encoded(t: DataFrame) -> DataFrame:
-    """The surrogate-key body of build_edges: t = (conv_id, turn_idx,
-    span_start, src, rel_type, dst) post flip/symmetry.  See build_edges
-    for the rationale; the invariant is bit-identical output."""
-    h1 = lambda c: F.xxhash64(F.col(c))  # noqa: E731
-    h2 = lambda c: F.hash(F.col(c))      # noqa: E731  (murmur3-32)
-    # (hash → id) dictionary: one compact row per distinct entity string.
-    # ONE scan (explode, not a self-union which scans twice), map-side
-    # partial-distinct before the exchange, then an EAGER localCheckpoint:
-    # both decode joins below consume this frame, and without pinning it
-    # each join would re-derive the dictionary — re-scanning the whole
-    # triple input once per join (measured 10→52s materialize stage wall
-    # at the 8M corpus before the pin).
-    ids = (
-        t.select(F.explode(F.array("src", "dst")).alias("id"))
-        .distinct()
-        .select(h1("id").alias("h1"), h2("id").alias("h2"), F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    enc = t.select(
-        "conv_id",
-        "turn_idx",
-        "span_start",
-        h1("src").alias("src_h1"),
-        h2("src").alias("src_h2"),
-        "rel_type",
-        h1("dst").alias("dst_h1"),
-        h2("dst").alias("dst_h2"),
-    )
-    agg = enc.groupBy("src_h1", "src_h2", "rel_type", "dst_h1", "dst_h2").agg(
-        F.count(F.lit(1)).cast("int").alias("stoichiometry"),
-        F.min(F.struct("conv_id", "turn_idx", "span_start")).alias("first_occ"),
-    )
-    # decode dst first — the W1 tiebreak needs the dst STRING
-    agg = agg.join(
-        ids.select(
-            F.col("h1").alias("dst_h1"),
-            F.col("h2").alias("dst_h2"),
-            F.col("id").alias("dst"),
-        ),
-        ["dst_h1", "dst_h2"],
-    ).drop("dst_h1", "dst_h2")
-    w = Window.partitionBy("src_h1", "src_h2", "rel_type").orderBy(
-        F.col("first_occ"), F.col("dst")
-    )
-    ranked = agg.withColumn("order", F.row_number().over(w).cast("int"))
-    return (
-        ranked.join(
-            ids.select(
-                F.col("h1").alias("src_h1"),
-                F.col("h2").alias("src_h2"),
-                F.col("id").alias("src"),
-            ),
-            ["src_h1", "src_h2"],
-        )
-        .select(
-            "src",
-            "dst",
-            "rel_type",
-            "stoichiometry",
-            "order",
-            F.col("first_occ.conv_id").alias("conv_id"),
-            F.lit(RUN_TS).alias("created_ts"),
-            F.lit("materialize").alias("stage"),
-        )
-    )
-
-
 TOP_LEVEL_LABEL = "TopLevelEntity"
 DB_INFO_ID = "dbinfo:kg-pipeline"
 
@@ -281,7 +171,6 @@ def build_nodes(
     broadcast_threshold: int | None = None,
     top_level_ids: DataFrame | None = None,
     db_info: dict | None = None,
-    minted_names: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct canonical entities → typed, labeled node table.
 
@@ -349,19 +238,6 @@ def build_nodes(
         )
     )
     n = ids.join(_maybe_bcast(cat, _cat_small), "canonical_id", "left")
-    if minted_names is not None:
-        # Hashed-minted-id mode (spark.kg.link.hashedMintedIds): the id no
-        # longer embeds the surface, so the display name comes from the
-        # vocabulary dim carried once from linking (link_vocab).  Nodes are
-        # one row per entity — this join never touches the edge stream.
-        mn = minted_names.select("canonical_id", "minted_name")
-        n = n.join(
-            _maybe_bcast(mn, _fits_broadcast(mn, broadcast_threshold)),
-            "canonical_id",
-            "left",
-        )
-    else:
-        n = n.withColumn("minted_name", F.lit(None).cast("string"))
     n = n.withColumn(
         "schema_class",
         F.when(F.col("entity_type").isNotNull(), F.col("entity_type"))
@@ -371,12 +247,11 @@ def build_nodes(
         "display_name",
         F.coalesce(
             "canonical_name",
-            "minted_name",
             F.regexp_replace(
                 "canonical_id", f"^({MINTED_PREFIX}|{TOOL_ENTITY_PREFIX})", ""
             ),
         ),
-    ).drop("minted_name")
+    )
     n = n.join(labels_df, n["schema_class"] == labels_df["entity_type"], "left").drop(
         labels_df["entity_type"]
     )

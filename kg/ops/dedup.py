@@ -7,12 +7,12 @@ codegen; no Python in the hot path):
 - minhash + LSH:  word-3-shingles → per-band min(md5) signature →
                   band-bucket self-join → candidate pairs
 - simhash:        32-bit parity fingerprint from token md5 hex digits
-- n-gram Jaccard: blocked shingle self-join → |∩| / |∪|
+- n-gram Jaccard: LSH candidate pairs → exact |∩| / |∪| of shingle sets
 
 Scale notes (10^8+ docs): the shingle arrays are computed per-row with
 array expressions (no explode until the join that needs it); Jaccard
-candidates come from the MinHash band buckets by default (a metadata
-block key can be corpus-sized ⇒ quadratic); LSH buckets themselves are
+candidates come from the MinHash band buckets (a metadata block key
+can be corpus-sized ⇒ quadratic); LSH buckets themselves are
 capped at max_bucket_size docs (a 10^6-doc boilerplate bucket is a
 10^12-pair self-join) with the dropped buckets auditable via
 lsh_oversized_buckets; the exact-dedup groupBy is a single hash shuffle
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 N_BANDS = 4
 SHINGLE_K = 3
@@ -133,28 +132,10 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
-def _row_min(b: int, j: int, rows_per_band: int) -> Column:
-    """Row-minhash j of band b: min over shingles of md5(i|shingle) for
-    the globally-indexed hash function i = b·r + j (so the (b, 1) legacy
-    config hashes with prefix 'b|' — byte-identical to the round-1
-    single-row signature).
-
-    NB: the transform lambda must take exactly ONE parameter — a two-arg
-    lambda would receive the array index as its second arg."""
-    prefix = f"{b * rows_per_band + j}|"
-    return F.array_min(
-        F.transform(
-            F.col("sh"),
-            lambda s: F.md5(F.concat(F.lit(prefix), s).cast("binary")),
-        )
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     n_bands: int = N_BANDS,
     rows_per_band: int = 1,
-    impl: str | None = None,
 ) -> DataFrame:
     """(doc_id, mh0..mh{n_bands-1}): banded minhash signatures.
 
@@ -168,41 +149,18 @@ def minhash_signatures(
     default for the existing oracle entries, (8, 4)-style configs are
     the production shape (knee ≈ 0.6).
 
-    Two implementations, identical output (asserted in tests):
+    Explode, then aggregate: md5 of each (row-hash index, shingle) is a
+    plain projection (whole-stage codegen), then one map-combined
+    groupBy(doc_id) min, so the shuffle carries |docs|·b·r digests, not
+    the shingle stream.  The transform/array_min form evaluates md5
+    interpreted inside the lambda — ~8× slower at sf1.0; tests keep it as
+    the row-identical reference.  explode_outer keeps zero-shingle docs
+    as a NULL row ⇒ NULL in every band, matching min over an empty list
+    in the DuckDB oracle.  Row-minhash i = b·r + j hashes 'i|' || shingle,
+    so (b, 1) is byte-identical to the round-1 single-row signature.
 
-    - ``agg`` (default, r6): explode_outer the shingles, compute all
-      b·r md5s as PLAIN projections (whole-stage codegen), then one
-      map-combined groupBy(doc_id) min.  Spark evaluates lambda bodies
-      inside higher-order functions INTERPRETED, so the old transform/
-      array_min form paid interpreted md5 × b·r per shingle — measured
-      ~8× slower at sf1.0 (guide §1.2 "per-task work").  The explode
-      keeps a doc's shingle rows inside their map partition, so the
-      partial min collapses each doc to ONE row per aggregation column
-      before the exchange — the shuffle carries |docs|·b·r hex strings,
-      not the shingle stream.  explode_outer (not explode) keeps
-      zero-shingle docs as a NULL row ⇒ NULL in every band, matching
-      list_aggregate/min over an empty list in the DuckDB oracle.
-    - ``hof`` (legacy): the array-expression form — no explode, no
-      shuffle at all; kept for the A/B and for map-only contexts where
-      an extra exchange is unacceptable.
-
-    Select via ``impl=`` or ``spark.kg.dedup.minhashImpl``.
     Assumes doc_id is unique (every dedup operator here does).
     """
-    if impl is None:
-        impl = docs.sparkSession.conf.get("spark.kg.dedup.minhashImpl", "agg")
-    if impl == "hof":
-        def _band_sig(b: int) -> Column:
-            mins = [_row_min(b, j, rows_per_band) for j in range(rows_per_band)]
-            if rows_per_band == 1:
-                return mins[0].alias(f"mh{b}")
-            return F.md5(F.concat(*mins).cast("binary")).alias(f"mh{b}")
-
-        return with_shingles(docs).select(
-            "doc_id", *[_band_sig(b) for b in range(n_bands)]
-        )
-    if impl != "agg":
-        raise ValueError(f"unknown minhash impl {impl!r} (want 'agg' or 'hof')")
     nh = n_bands * rows_per_band
     ex = with_shingles(docs).select(
         "doc_id", F.explode_outer("sh").alias("_s")
@@ -375,15 +333,16 @@ def near_dup_clusters(
     (LSH-blocked, so bounded at any corpus size) are treated as edges of
     an undirected graph; connected components merge chains A~B~C even
     when A,C never co-occur in a bucket; the keeper is the longest
-    document (n_chars desc, doc_id asc tiebreak) — "keep the most
-    complete copy", the usual training-data policy.
+    document (n_chars desc, NULL n_chars last, doc_id asc tiebreak) —
+    "keep the most complete copy", the usual training-data policy.
 
     Scale shape: pairs are LSH-bounded; CC reuses kg.canonicalize
     (driver union-find under 100k edges — dup graphs are tiny relative
-    to the corpus — else the O(log n) star fixpoint); everything after
-    is one window over clustered docs only.  Docs in no pair are their
-    own singleton cluster via the left join + coalesce, never entering
-    the CC or the window.
+    to the corpus — else the O(log n) star fixpoint); the keeper
+    election is a map-combined min(struct) aggregation over clustered
+    docs only, joined back to them.  Docs in no pair are their own
+    singleton cluster via an anti-join against the mapping, never
+    entering the CC or the election.
     """
     from kg.canonicalize import connected_components
 
@@ -393,7 +352,7 @@ def near_dup_clusters(
     # chain recomputes per action (measured: the r5 build at sf1.0 ran
     # the chain 2× per invocation).
     pairs = ngram_jaccard_pairs(
-        docs, threshold, None, n_bands, max_bucket_size, rows_per_band
+        docs, threshold, n_bands, max_bucket_size, rows_per_band
     ).persist()
     # CC canonical_id is the LEXICOGRAPHIC min node; zero-pad so that
     # equals the numeric min doc_id (and the oracle's plain min()).
@@ -419,13 +378,20 @@ def near_dup_clusters(
     # mega-cluster, and all singleton docs dragged through the exchange
     # for nothing.  A doc in no pair is its own keeper by definition, so
     # the election now runs only over the CLUSTERED docs (dup-graph-
-    # sized, tiny vs the corpus) as min(struct(-n_chars, doc_id)) with
-    # map-side partial aggregation + an AQE-skew-splittable join-back;
-    # singletons take a broadcast anti-join against the mapping and a
-    # pure projection.  Same rows as the window form by construction.
+    # sized, tiny vs the corpus) as min(struct(n_chars is NULL, -n_chars,
+    # doc_id)) with map-side partial aggregation + an AQE-skew-splittable
+    # join-back; singletons take a broadcast anti-join against the mapping
+    # and a pure projection.  The leading NULL flag ranks a doc of unknown
+    # length last: struct ordering puts NULL fields first, so a bare
+    # -n_chars would elect it.
     clustered = docs.select("doc_id", "n_chars").join(mapping, "doc_id")
+    key = F.struct(
+        F.col("n_chars").isNull().alias("_null"),
+        (-F.col("n_chars")).alias("_neg"),
+        F.col("doc_id"),
+    )
     keepers = clustered.groupBy("cluster_id").agg(
-        F.min(F.struct((-F.col("n_chars")).alias("_neg"), F.col("doc_id"))).alias("_k")
+        F.min(key).alias("_k")
     ).select("cluster_id", F.col("_k.doc_id").alias("keeper_doc_id"))
     out_clustered = clustered.join(keepers, "cluster_id").select(
         "doc_id", "cluster_id", "keeper_doc_id"
@@ -457,16 +423,14 @@ def near_dup_dedup(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.05,
-    block_cols: tuple[str, ...] | None = None,
     n_bands: int = N_BANDS,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     rows_per_band: int = 1,
 ) -> DataFrame:
-    """(doc_a, doc_b, jaccard): exact word-3-shingle Jaccard over blocked
-    candidate pairs.
+    """(doc_a, doc_b, jaccard): exact word-3-shingle Jaccard over
+    MinHash-LSH-blocked candidate pairs.
 
-    DEFAULT blocking (block_cols=None) is the MinHash-LSH band bucket —
-    candidate pairs come from minhash_lsh_pairs (bounded per bucket), then
+    Candidate pairs come from minhash_lsh_pairs (bounded per bucket), then
     each candidate's |∩| is computed exactly as
     size(array_intersect(set_a, set_b)) over the per-doc DISTINCT shingle
     SETS, and |∪| = na + nb − |∩|.  r6 restructure (same rows, oracle-
@@ -480,89 +444,45 @@ def ngram_jaccard_pairs(
     shingle explode at all: sets are built map-side (array_distinct) and
     each candidate pair costs one O(na+nb) intersect.  Bucket membership
     bounds the pair count at any corpus size; a metadata block like
-    (lang, source) does NOT (one block can be corpus-sized ⇒ quadratic),
-    so that path survives only as an explicit opt-in for small,
-    genuinely-partitioned corpora.
+    (lang, source) would not (one block can be corpus-sized ⇒ quadratic).
     """
-    if block_cols is None:
-        # per-doc distinct shingle sets, map-only; persisted because both
-        # pair endpoints join against it (and the pair table is LSH-
-        # bounded, so the join attaches sets to candidate rows only)
-        shs = (
-            with_shingles(docs)
-            .select("doc_id", F.array_distinct("sh").alias("shs"))
-            .withColumn("n_sh", F.size("shs"))
-            .persist()
-        )
-        # LSH candidates share the band-argmin shingle (all r row-argmin
-        # shingles when rows_per_band > 1), so the inner joins below can
-        # never drop a candidate (n_common ≥ 1).
-        cand = minhash_lsh_pairs(docs, n_bands, max_bucket_size, rows_per_band)
-        return (
-            cand.join(
-                shs.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("shs").alias("_sa"),
-                    F.col("n_sh").alias("na"),
-                ),
-                "doc_a",
-            )
-            .join(
-                shs.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("shs").alias("_sb"),
-                    F.col("n_sh").alias("nb"),
-                ),
-                "doc_b",
-            )
-            .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(
-                    F.col("n_common")
-                    / (F.col("na") + F.col("nb") - F.col("n_common")),
-                    6,
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-    # explicit metadata-block path (opt-in): exploded-shingle equi-join.
-    # explode_outer + null filter (NOT plain explode):
-    # InferFiltersFromGenerate would otherwise clone the shingle transform
-    # into a pre-exchange filter evaluated at scan parallelism.
-    sh = (
+    # per-doc distinct shingle sets, map-only; persisted because both
+    # pair endpoints join against it (and the pair table is LSH-bounded,
+    # so the join attaches sets to candidate rows only)
+    shs = (
         with_shingles(docs)
-        .select(
-            "doc_id", *block_cols, F.explode_outer("sh").alias("shingle")
-        )
-        .where(F.col("shingle").isNotNull())
-        .distinct()
+        .select("doc_id", F.array_distinct("sh").alias("shs"))
+        .withColumn("n_sh", F.size("shs"))
         .persist()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
-        F.col("a.doc_id") < F.col("b.doc_id")
-    )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    common = (
-        a.join(b, cond)
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+    # LSH candidates share the band-argmin shingle (all r row-argmin
+    # shingles when rows_per_band > 1), so the inner joins below can
+    # never drop a candidate (n_common ≥ 1).
+    cand = minhash_lsh_pairs(docs, n_bands, max_bucket_size, rows_per_band)
     return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
+        cand.join(
+            shs.select(
+                F.col("doc_id").alias("doc_a"),
+                F.col("shs").alias("_sa"),
+                F.col("n_sh").alias("na"),
+            ),
+            "doc_a",
+        )
+        .join(
+            shs.select(
+                F.col("doc_id").alias("doc_b"),
+                F.col("shs").alias("_sb"),
+                F.col("n_sh").alias("nb"),
+            ),
+            "doc_b",
+        )
+        .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
         .select(
             "doc_a",
             "doc_b",
             F.round(
-                F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")), 6
+                F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")),
+                6,
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)

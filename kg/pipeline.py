@@ -5,7 +5,9 @@ raw_triples × catalog ──Stage2 link──▶ linked_triples
 alias_pairs ──Stage3 CC──▶ canonical mapping ──▶ canonical_triples
 canonical_triples ──Stage4──▶ kg.nodes / kg.edges (+ QA + manifests)
 
-Two run modes:
+The DAG is declared once (_build_stages) as an ordered worklist of named
+stages, like the reference's import phases (ReactomeBatchImporter.java:
+145-149).  The two run modes differ only in how a stage is run:
 - run_pipeline(...): in-memory DataFrames end to end (tests, entry()).
 - run_pipeline_materialized(...): every stage lands in parquet with a
   manifest; completed stages (same input snapshot) are skipped on rerun —
@@ -14,13 +16,14 @@ Two run modes:
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
 from kg.lineage import read_stage, stage_is_complete, write_stage
-from kg.link import HASHED_MINT_CONF, MINTED_PREFIX, link_triples, link_vocab
+from kg.link import link_triples
 from kg.materialize import (
     build_edges,
     build_nodes,
@@ -32,34 +35,73 @@ from kg.materialize import (
     top_level_component_ids,
 )
 
-STAGES = ("raw_triples", "linked_triples", "canonical_triples", "nodes", "edges")
+# stage(name, build) runs one stage: build() returns its lazy DataFrame,
+# and stage returns the frame the downstream stages read.
+Stage = Callable[[str, Callable[[], DataFrame]], DataFrame]
 
 
-def _hashed_mint_on(spark: SparkSession) -> bool:
-    return str(spark.conf.get(HASHED_MINT_CONF, "false")).lower() == "true"
-
-
-def _minted_names(vocab: DataFrame) -> DataFrame:
-    """(canonical_id, minted_name) dim from the linking vocabulary — lets
-    build_nodes show the surface behind a hashed minted id.
-
-    r6 (ADVICE r5): the vocabulary is distinct per raw SURFACE, so two
-    surfaces normalizing to one blocking key ('[[Foo]]' vs '[[foo]]')
-    yield the same (entity_id, blocking_key) twice — without the
-    .distinct() the build_nodes left join fanned the node table out to
-    duplicate rows per minted id.  Tool-surface misses are also
-    is_minted (their entity_id is 'tool:<name>'); they are excluded so
-    plain and hashed modes show the same prefix-stripped tool display
-    name."""
-    return (
-        vocab.where("is_minted")
-        .where(F.col("entity_id").startswith(MINTED_PREFIX))
-        .select(
-            F.col("entity_id").alias("canonical_id"),
-            F.col("blocking_key").alias("minted_name"),
-        )
-        .distinct()
+def _build_stages(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    catalog: DataFrame,
+    alias_pairs: DataFrame,
+    input_snapshot: str | None,
+    stage: Stage,
+) -> dict[str, DataFrame]:
+    """The pipeline DAG, in run order: raw_triples, linked_triples,
+    mapping, canonical_triples, nodes, edges."""
+    raw = stage("raw_triples", lambda: extract_triples(transcripts))
+    linked = stage("linked_triples", lambda: link_triples(raw, catalog))
+    mapping = stage("mapping", lambda: connected_components(alias_pairs))
+    canonical = stage(
+        "canonical_triples", lambda: apply_canonical_map(linked, mapping)
     )
+    nodes = stage(
+        "nodes",
+        lambda: build_nodes(
+            canonical,
+            catalog,
+            mapping,
+            input_snapshot,
+            top_level_ids=top_level_component_ids(mapping),  # P9 analog
+            db_info={  # P10 analog: provenance as a first-class node
+                "name": "kg-pipeline",
+                "checksum": input_snapshot or "",
+                "engine": f"spark-{spark.version}",
+            },
+        ),
+    )
+    # TrackingObjects analog: the run's Person/InstanceEdit wiring becomes
+    # first-class graph edges next to the content edges
+    edges = stage(
+        "edges",
+        lambda: build_edges(canonical).unionByName(provenance_edges(spark)),
+    )
+    return {
+        "raw_triples": raw,
+        "linked_triples": linked,
+        "mapping": mapping,
+        "canonical_triples": canonical,
+        "nodes": nodes,
+        "edges": edges,
+    }
+
+
+def _in_memory_stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """run_pipeline's stage: lazy, except that raw_triples and
+    canonical_triples are persisted.  Each is consumed by two downstream
+    branches (linking probes the distinct surfaces of the triples
+    themselves; nodes and edges both read the canonical stream), and
+    without a persist Catalyst re-executes the pandas-UDF extraction once
+    per branch — measured 2× the stage-1 cost at bench scale."""
+    df = build()
+    if name == "raw_triples":
+        df = df.persist()
+        df.count()  # eager fill: see link_triples — concurrent broadcast
+        # threads would otherwise recompute the extraction UDF per exchange
+    elif name == "canonical_triples":
+        df = df.persist()
+    return df
 
 
 def run_pipeline(
@@ -70,67 +112,21 @@ def run_pipeline(
     input_snapshot: str | None = None,
 ) -> dict[str, DataFrame]:
     """Mostly-lazy end-to-end plan (the CC fixpoint runs its own actions).
-
-    raw_triples and canonical_triples are persisted: each is consumed by
-    two downstream branches (linking probes the distinct surfaces of the
-    triples themselves; nodes and edges both read the canonical stream),
-    and without a persist Catalyst re-executes the pandas-UDF extraction
-    once per branch — measured 2× the stage-1 cost at bench scale.  The
-    materialized runner (below) gets the same effect from its per-stage
-    parquet writes instead.
-    """
-    raw = extract_triples(transcripts).persist()
-    raw.count()  # eager fill: see link_triples — concurrent broadcast
-    # threads would otherwise recompute the extraction UDF per exchange
-    if _hashed_mint_on(spark):
-        vocab = link_vocab(raw, catalog).persist()
-        vocab.count()  # eager: vocab feeds both linking and minted_names
-        linked = link_triples(raw, catalog, surface_map=vocab)
-        minted = _minted_names(vocab)
-    else:
-        vocab = None
-        linked = link_triples(raw, catalog)
-        minted = None
-    mapping = connected_components(alias_pairs)  # has its own actions (fixpoint)
-    canonical = apply_canonical_map(linked, mapping).persist()
-    # TrackingObjects analog: the run's Person/InstanceEdit wiring becomes
-    # first-class graph edges next to the content edges
-    edges = build_edges(canonical).unionByName(provenance_edges(spark))
-    nodes = build_nodes(
-        canonical,
-        catalog,
-        mapping,
-        input_snapshot,
-        top_level_ids=top_level_component_ids(mapping),  # P9 analog
-        db_info={  # P10 analog: provenance as a first-class node
-            "name": "kg-pipeline",
-            "checksum": input_snapshot or "",
-            "engine": f"spark-{spark.version}",
-        },
-        minted_names=minted,
+    The materialized runner (below) gets the effect of the in-memory
+    persists from its per-stage parquet writes instead."""
+    return _build_stages(
+        spark, transcripts, catalog, alias_pairs, input_snapshot, _in_memory_stage
     )
-    return {
-        "raw_triples": raw,
-        "linked_triples": linked,
-        "mapping": mapping,
-        "canonical_triples": canonical,
-        "nodes": nodes,
-        "edges": edges,
-        "link_vocab": vocab,
-    }
 
 
 def release_pipeline(result: dict) -> None:
-    """Unpersist the DataFrames run_pipeline caches (raw_triples,
-    canonical_triples, and link_vocab in hashed-minted-id mode).
-    Call once downstream consumption is finished;
+    """Unpersist the DataFrames run_pipeline caches (raw_triples and
+    canonical_triples).  Call once downstream consumption is finished;
     long-lived drivers that run many pipelines without releasing
     accumulate cached blocks (the materialized runner needs no release —
     its stages live in parquet, not the block manager)."""
-    for key in ("raw_triples", "canonical_triples", "link_vocab"):
-        df = result.get(key)
-        if df is not None:
-            df.unpersist()
+    for key in ("raw_triples", "canonical_triples"):
+        result[key].unpersist()
 
 
 def run_qa(nodes: DataFrame, edges: DataFrame) -> dict[str, int]:
@@ -154,10 +150,8 @@ def run_pipeline_materialized(
 ) -> dict:
     """Materialized run with per-stage manifests + resume.
 
-    Stage granularity matches the reference's four import phases
-    (ReactomeBatchImporter.java:145-149 ordered worklist); each stage is
-    an atomic overwrite, so a crash between stages resumes exactly at the
-    first incomplete stage (tested in tests/test_resume.py).
+    Each stage is an atomic overwrite, so a crash between stages resumes
+    exactly at the first incomplete stage (tested in tests/test_resume.py).
     """
     # snapshot covers ALL inputs: a change in any of them invalidates resume
     snap = "xxh64:" + "-".join(
@@ -169,7 +163,7 @@ def run_pipeline_materialized(
     # stage-4 tables cluster on their join keys (SURVEY.md §4)
     cluster_keys = {"nodes": ["canonical_id"], "edges": ["src"]}
 
-    def _stage(name: str, build) -> DataFrame:
+    def _stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         if resume and stage_is_complete(out_dir, name, snap):
             manifests[name] = {"stage": name, "resumed": True}
             return read_stage(spark, out_dir, name)
@@ -179,56 +173,19 @@ def run_pipeline_materialized(
         )
         return read_stage(spark, out_dir, name)
 
-    raw = _stage("raw_triples", lambda: extract_triples(transcripts))
-    if _hashed_mint_on(spark):
-        # vocab is its own resumable stage: the minted-name dim must
-        # survive a crash between linking and node building (the hashed id
-        # cannot be inverted back to its surface).
-        vocab = _stage("link_vocab", lambda: link_vocab(raw, catalog))
-        linked = _stage(
-            "linked_triples",
-            lambda: link_triples(raw, catalog, surface_map=vocab),
-        )
-        minted = _minted_names(vocab)
-    else:
-        linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
-        minted = None
-    mapping = _stage("mapping", lambda: connected_components(alias_pairs))
-    canonical = _stage(
-        "canonical_triples", lambda: apply_canonical_map(linked, mapping)
-    )
-    nodes = _stage(
-        "nodes",
-        lambda: build_nodes(
-            canonical,
-            catalog,
-            mapping,
-            snap,
-            top_level_ids=top_level_component_ids(mapping),
-            db_info={
-                "name": "kg-pipeline",
-                "checksum": snap,
-                "engine": f"spark-{spark.version}",
-            },
-            minted_names=minted,
-        ),
-    )
-    edges = _stage(
-        "edges",
-        lambda: build_edges(canonical).unionByName(provenance_edges(spark)),
-    )
-    qa = run_qa(nodes, edges)
+    out = _build_stages(spark, transcripts, catalog, alias_pairs, snap, _stage)
+    qa = run_qa(out["nodes"], out["edges"])
     # D5 analog (ReactomeBatchImporter.java:81,615,624): count the losers
     # of the representative-per-component top-1 reduction in the summary
-    discarded = discarded_catalog_entities(catalog, mapping).count()
+    discarded = discarded_catalog_entities(catalog, out["mapping"]).count()
     return {
         "input_snapshot": snap,
         "manifests": manifests,
         "qa": qa,
         "discarded_catalog_entities": discarded,
-        "nodes": nodes,
-        "edges": edges,
-        "canonical_triples": canonical,
+        "nodes": out["nodes"],
+        "edges": out["edges"],
+        "canonical_triples": out["canonical_triples"],
     }
 
 
@@ -237,5 +194,4 @@ __all__ = [
     "run_pipeline_materialized",
     "release_pipeline",
     "run_qa",
-    "STAGES",
 ]

@@ -76,61 +76,3 @@ def test_release_pipeline_unpersists(spark, transcripts_df, catalog_df, alias_pa
     release_pipeline(res)
     assert not res["raw_triples"].storageLevel.useMemory
     assert not res["canonical_triples"].storageLevel.useMemory
-
-
-def test_hashed_minted_ids_pipeline_equivalence(
-    spark, transcripts_df, catalog_df, alias_pairs_df
-):
-    """spark.kg.link.hashedMintedIds=true ≡ default mode modulo the minted-id
-    bijection: same edge multiset on (src, rel_type, dst, stoichiometry)
-    after decoding hashed ids through the vocab dim, same QA, and minted
-    nodes keep their readable surface as display_name."""
-    from kg.link import HASHED_MINT_CONF, MINTED_PREFIX
-    from kg.materialize import SYMMETRIC_PREDICATES
-    from kg.pipeline import release_pipeline
-
-    def edge_key(src, rel, dst, stoich):
-        # D2 canonicalizes symmetric-edge direction by id string order,
-        # which legitimately differs under hashed ids — compare undirected.
-        if rel in SYMMETRIC_PREDICATES:
-            return (frozenset((src, dst)), rel, stoich)
-        return (src, rel, dst, stoich)
-
-    plain = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
-    plain_edges = {
-        edge_key(r.src, r.rel_type, r.dst, r.stoichiometry)
-        for r in plain["edges"].collect()
-    }
-    plain_minted_names = {
-        r.display_name
-        for r in plain["nodes"].where(f"canonical_id like '{MINTED_PREFIX}%'").collect()
-    }
-    release_pipeline(plain)
-
-    spark.conf.set(HASHED_MINT_CONF, "true")
-    try:
-        hashed = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
-        vocab = hashed["link_vocab"]
-        decode = {
-            r.entity_id: MINTED_PREFIX + r.blocking_key
-            for r in vocab.where("is_minted").collect()
-            if r.entity_id.startswith(MINTED_PREFIX)
-        }
-        # every hashed minted id is fixed-width and decodable
-        assert all(len(k) == 36 for k in decode)
-        dec = lambda x: decode.get(x, x)  # noqa: E731
-        hashed_edges = {
-            edge_key(dec(r.src), r.rel_type, dec(r.dst), r.stoichiometry)
-            for r in hashed["edges"].collect()
-        }
-        assert hashed_edges == plain_edges
-        assert all(v == 0 for v in run_qa(hashed["nodes"], hashed["edges"]).values())
-        hashed_minted_names = {
-            r.display_name
-            for r in hashed["nodes"]
-            .where(f"canonical_id like '{MINTED_PREFIX}%'").collect()
-        }
-        assert hashed_minted_names == plain_minted_names
-        release_pipeline(hashed)
-    finally:
-        spark.conf.unset(HASHED_MINT_CONF)

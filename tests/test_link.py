@@ -107,32 +107,15 @@ def test_hashed_minting(spark, catalog_df):
     assert salted == {s: e for s, (e, _) in got.items()}
 
 
-def test_hashed_mint_conf_resolution(spark, catalog_df):
-    """hashed_ids=None reads spark.kg.link.hashedMintedIds."""
-    from kg.link import HASHED_MINT_CONF
-
-    surf = spark.createDataFrame([("Unseen Surface Xyz",)], "surface string")
-    spark.conf.set(HASHED_MINT_CONF, "true")
-    try:
-        row = link_surfaces(surf, catalog_df).collect()[0]
-        assert row["entity_id"].startswith("new:") and len(row["entity_id"]) == 36
-    finally:
-        spark.conf.unset(HASHED_MINT_CONF)
-    row = link_surfaces(surf, catalog_df).collect()[0]
-    assert row["entity_id"] == "new:unseen surface xyz"
-
-
 def test_minted_names_dedup_and_tool_exclusion(spark):
-    """r6 (ADVICE r5, high+medium): under hashed-minted-id mode, two
-    surfaces sharing a blocking key must yield ONE node row (not a
+    """Two surfaces sharing a blocking key must yield ONE node row (not a
     fan-out per surface variant), and tool entities keep the
     prefix-stripped display name instead of the raw 'tool::<name>' key."""
     import datetime as dt
 
     import pandas as pd
 
-    from kg.link import HASHED_MINT_CONF
-    from kg.pipeline import run_pipeline
+    from kg.pipeline import release_pipeline, run_pipeline
     from kg.schema import ALIAS_PAIRS_SCHEMA, CATALOG_SCHEMA, TRANSCRIPTS_SCHEMA
 
     rows = [
@@ -148,12 +131,9 @@ def test_minted_names_dedup_and_tool_exclusion(spark):
     tr = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
     cat = spark.createDataFrame([], CATALOG_SCHEMA)
     ap = spark.createDataFrame([], ALIAS_PAIRS_SCHEMA)
-    spark.conf.set(HASHED_MINT_CONF, "true")
-    try:
-        res = run_pipeline(spark, tr, cat, ap)
-        nodes = res["nodes"].collect()
-    finally:
-        spark.conf.unset(HASHED_MINT_CONF)
+    res = run_pipeline(spark, tr, cat, ap)
+    nodes = res["nodes"].collect()
+    release_pipeline(res)
     by_id = {}
     for r in nodes:
         by_id.setdefault(r["canonical_id"], []).append(r)

@@ -43,32 +43,9 @@ def test_order_is_first_appearance_not_count(spark):
     assert got == {"C": 1, "B": 2}
 
 
-def test_encoded_edges_bit_identical_to_plain(spark, transcripts_df, catalog_df, alias_pairs_df):
-    """The surrogate-id path (hash-keyed agg + window, post-hoc string
-    decode) must produce the EXACT edge table of the plain path —
-    including the order column, whose tiebreak ranks by the decoded dst
-    string (VERDICT r3 item 1)."""
-    from kg.canonicalize import apply_canonical_map, connected_components
-    from kg.extract import extract_triples
-    from kg.link import link_triples
-
-    canonical = apply_canonical_map(
-        link_triples(extract_triples(transcripts_df), catalog_df),
-        connected_components(alias_pairs_df),
-    )
-    cols = ["src", "dst", "rel_type", "stoichiometry", "order", "conv_id"]
-    plain = sorted(
-        map(tuple, build_edges(canonical, encode_ids=False).select(*cols).collect())
-    )
-    enc = sorted(
-        map(tuple, build_edges(canonical, encode_ids=True).select(*cols).collect())
-    )
-    assert enc == plain and len(plain) > 0
-
-
 def test_encoded_edges_hand_computed_order_ties(spark):
-    """Order tiebreaks that depend on STRING comparison of dst must
-    survive encoding (the hashes do not order like the strings)."""
+    """W1 order tiebreak on equal first_occ ranks by the dst STRING
+    (case-sensitive sort: "Alpha" < "beta" < "gamma")."""
     rows = [
         # same (conv, turn, span) first_occ for all three dsts ⇒ order is
         # decided purely by dst string sort: Alpha < beta < gamma
@@ -77,8 +54,7 @@ def test_encoded_edges_hand_computed_order_ties(spark):
         ("c1", 0, 0, "A", "followed_by", "beta"),
     ]
     df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    got = {r["dst"]: r["order"]
-           for r in build_edges(df, encode_ids=True).collect()}
+    got = {r["dst"]: r["order"] for r in build_edges(df).collect()}
     assert got == {"Alpha": 1, "beta": 2, "gamma": 3}
 
 

@@ -200,28 +200,6 @@ def test_lsh_hot_bucket_cap_drops_pathological_bucket(spark):
     assert all(r["n_docs"] == 100 for r in audit)
 
 
-def test_ngram_jaccard_explicit_block_cols_path(spark):
-    """The metadata-block opt-in still works and agrees with the LSH
-    default on docs that share a band."""
-    d = _docs(
-        spark,
-        [(1, "a b c d", "en", "s", 1), (2, "a b c e", "en", "s", 1)],
-    )
-    lsh_default = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(d, threshold=0.0).collect()
-    }
-    blocked = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(
-            d, threshold=0.0, block_cols=("lang", "source")
-        ).collect()
-    }
-    assert lsh_default == blocked == {(1, 2, 1 / 3)} or (
-        lsh_default == blocked and len(blocked) == 1
-    )
-
-
 def test_embedding_near_dup_bucket_blocks_quadratic(spark):
     """Default bucket blocking: near-identical vectors land in one bucket
     and are found; orthogonal vectors are not compared."""
@@ -481,6 +459,22 @@ def test_near_dup_clusters_13_digit_doc_ids(spark):
     assert rows[a1]["cluster_id"] != rows[b1]["cluster_id"]
     assert rows[a1]["keeper_doc_id"] == a2  # longer doc wins
     assert rows[b1]["keeper_doc_id"] == b2
+
+
+def test_near_dup_clusters_null_n_chars_never_keeper(spark):
+    """A caller-supplied docs table can carry text with a NULL n_chars.
+    The keeper is the longest KNOWN document: NULL ranks last, even
+    against a higher doc_id (struct min would otherwise put it first)."""
+    from kg.ops.dedup import near_dup_clusters
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    d = _docs(
+        spark,
+        [(1, base + " alpha", "en", "s1", None), (2, base + " alpha beta", "en", "s1", 75)],
+    )
+    rows = {r["doc_id"]: r for r in near_dup_clusters(d, threshold=0.3).collect()}
+    assert rows[1]["cluster_id"] == rows[2]["cluster_id"] == 1
+    assert rows[1]["keeper_doc_id"] == rows[2]["keeper_doc_id"] == 2
 
 
 def test_ivf_at_scale_matches_brute_force_when_probing_all_cells(spark):
@@ -836,9 +830,39 @@ def test_lsh_multiprobe_recall_dominates_single_bucket(spark):
     assert len(multi & bf) > len(single & bf)
 
 
+def _hof_minhash_signatures(docs, n_bands, rows_per_band):
+    """Reference form of kg.ops.dedup.minhash_signatures: the array-
+    expression (transform/array_min) composition, no explode and no
+    shuffle.  Row-minhash j of band b is min over shingles of
+    md5('i|' || shingle) for the global hash index i = b·r + j.
+
+    NB: the transform lambda must take exactly ONE parameter — a two-arg
+    lambda would receive the array index as its second arg."""
+    from kg.ops.dedup import with_shingles
+
+    def _row_min(b, j):
+        prefix = f"{b * rows_per_band + j}|"
+        return F.array_min(
+            F.transform(
+                F.col("sh"),
+                lambda s: F.md5(F.concat(F.lit(prefix), s).cast("binary")),
+            )
+        )
+
+    def _band_sig(b):
+        mins = [_row_min(b, j) for j in range(rows_per_band)]
+        if rows_per_band == 1:
+            return mins[0].alias(f"mh{b}")
+        return F.md5(F.concat(*mins).cast("binary")).alias(f"mh{b}")
+
+    return with_shingles(docs).select(
+        "doc_id", *[_band_sig(b) for b in range(n_bands)]
+    )
+
+
 def test_minhash_agg_equals_hof_impl(spark):
-    """r6: the codegen explode+agg minhash path must be row-identical to
-    the legacy HOF array-expression path — including NULL bands for
+    """r6: the codegen explode+agg minhash must be row-identical to the
+    HOF array-expression reference — including NULL bands for
     zero-shingle docs and the b8r4 banded composition."""
     from kg.ops.dedup import minhash_signatures
 
@@ -852,8 +876,8 @@ def test_minhash_agg_equals_hof_impl(spark):
     ]
     d = _docs(spark, rows)
     for nb, r in ((4, 1), (8, 4)):
-        agg = sorted(minhash_signatures(d, nb, r, impl="agg").collect())
-        hof = sorted(minhash_signatures(d, nb, r, impl="hof").collect())
+        agg = sorted(minhash_signatures(d, nb, r).collect())
+        hof = sorted(_hof_minhash_signatures(d, nb, r).collect())
         assert agg == hof
         # zero-shingle docs present with all-NULL bands
         null_rows = [x for x in agg if x["doc_id"] in (3, 4, 5)]

@@ -66,40 +66,3 @@ def test_manifest_has_partition_lineage(
     assert m["rows"] == sum(p["rows"] for p in m["partition_lineage"])
     assert m["partitions"] >= 1
     assert m["input_snapshot"].startswith("xxh64:")
-
-
-def test_hashed_mode_materialized_resume(
-    spark, transcripts_df, catalog_df, alias_pairs_df, tmp_path
-):
-    """Hashed-minted-id mode adds a resumable link_vocab stage: a crash
-    between linking and node building must still let build_nodes recover
-    minted display names (the hash is not invertible)."""
-    from kg.link import HASHED_MINT_CONF
-
-    out = str(tmp_path / "kgout_hashed")
-    spark.conf.set(HASHED_MINT_CONF, "true")
-    try:
-        full = run_pipeline_materialized(
-            spark, transcripts_df, catalog_df, alias_pairs_df, out
-        )
-        assert "link_vocab" in full["manifests"]
-        assert all(v == 0 for v in full["qa"].values())
-        baseline = _edges_pdf(full)
-        minted = full["nodes"].where("schema_class = 'minted'")
-        # display names decoded through the vocab dim, not the hash
-        assert minted.where("display_name rlike '^[0-9a-f]{32}$'").count() == 0
-
-        # crash after linking: nodes/edges (and downstream) gone
-        for stage in ("canonical_triples", "nodes", "edges", "mapping"):
-            shutil.rmtree(os.path.join(out, stage), ignore_errors=True)
-            mp = os.path.join(out, f"_manifest_{stage}.json")
-            if os.path.exists(mp):
-                os.remove(mp)
-        resumed = run_pipeline_materialized(
-            spark, transcripts_df, catalog_df, alias_pairs_df, out, resume=True
-        )
-        assert resumed["manifests"]["link_vocab"].get("resumed")
-        assert resumed["manifests"]["linked_triples"].get("resumed")
-        pd.testing.assert_frame_equal(baseline, _edges_pdf(resumed))
-    finally:
-        spark.conf.unset(HASHED_MINT_CONF)
