@@ -21,6 +21,7 @@ grow exponentially (SURVEY.md §7 risk 3).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -29,7 +30,13 @@ from pyspark.sql.window import Window
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Small-graph fast path: one collect + path-halving union-find.
     Root is kept at the lexicographic min, matching the distributed
-    algorithm's canonical_id exactly."""
+    algorithm's canonical_id exactly.
+
+    The mapping goes back to Spark as an Arrow table, so it is a JVM
+    LocalRelation: its scans launch no Python worker, and the broadcast
+    gates read its row count from the plan (kg.probes.rows_at_most)
+    instead of running a job.  A list of rows would become a Python RDD
+    that every downstream scan re-runs on Python workers."""
     spark = edges.sparkSession
     pairs = edges.select("src", "dst").collect()
     parent: dict[str, str] = {}
@@ -46,8 +53,9 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node string, canonical_id string")
+    nodes = list(parent)
+    table = pa.table({"node": nodes, "canonical_id": [find(n) for n in nodes]})
+    return spark.createDataFrame(table, "node string, canonical_id string")
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:

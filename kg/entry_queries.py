@@ -113,13 +113,23 @@ def a2_latest_top1_per_group(spark, sf_dir):
     orders table (the struct form fell back to SortAggregate, which
     sorted every row by custkey first — as expensive as the window it
     replaced).  Decode is exact integer div/pmod; same winner per group,
-    oracle hash unchanged."""
+    oracle hash unchanged.
+
+    The packing is order-preserving only for a non-null date and
+    0 ≤ orderkey: a row outside that domain fails the query (assert_true)
+    instead of silently changing its group's winner."""
     o = _t(spark, sf_dir, "orders")
     b = F.lit("10000000000000000000").cast("decimal(20,0)")  # 10^19
-    enc = (
+    in_domain = F.assert_true(
+        F.col("o_orderdate").isNotNull() & (F.col("o_orderkey") >= 0),
+        "a2_latest_top1_per_group: packing needs a non-null o_orderdate "
+        "and o_orderkey >= 0",
+    )
+    enc = F.coalesce(
+        in_domain.cast("decimal(38,0)"),
         F.unix_micros(F.col("o_orderdate").cast("timestamp"))
         .cast("decimal(19,0)") * b
-        + F.col("o_orderkey").cast("decimal(19,0)")
+        + F.col("o_orderkey").cast("decimal(19,0)"),
     )
     top = o.groupBy("o_custkey").agg(F.max(enc).alias("e"))
     micros = ((F.col("e") - F.pmod("e", b)) / b).cast("long")

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -233,7 +234,10 @@ def build_nodes(
     spark = canonical_triples.sparkSession
     labels_df = F.broadcast(
         spark.createDataFrame(
-            [(k, v) for k, v in ENTITY_TYPE_LABELS.items()],
+            pa.table({
+                "entity_type": list(ENTITY_TYPE_LABELS),
+                "labels": list(ENTITY_TYPE_LABELS.values()),
+            }),
             "entity_type string, labels array<string>",
         )
     )
@@ -372,14 +376,26 @@ def provenance_edges(spark: SparkSession) -> DataFrame:
     the reference (TrackingObjects.java:64-85): (Person)-[:author]->
     (InstanceEdit) and (InstanceEdit)-[:created]->(DBInfo node), each
     with stoichiometry = 1 and order = 1 exactly like the reference's
-    static properties map (TrackingObjects.java:29-33)."""
-    from kg.schema import EDGES_SCHEMA
+    static properties map (TrackingObjects.java:29-33).
 
-    rows = [
-        (PERSON_ID, INSTANCE_EDIT_ID, "author", 1, 1, None, RUN_TS, PROVENANCE_STAGE),
-        (INSTANCE_EDIT_ID, DB_INFO_ID, "created", 1, 1, None, RUN_TS, PROVENANCE_STAGE),
-    ]
-    return spark.createDataFrame(rows, EDGES_SCHEMA)
+    Built from literals like provenance_nodes: created_ts is the same
+    F.lit(RUN_TS) as the content edges' stamp, and no Python worker runs."""
+
+    def _edge(src: str, dst: str, rel_type: str) -> DataFrame:
+        return spark.range(1).select(
+            F.lit(src).alias("src"),
+            F.lit(dst).alias("dst"),
+            F.lit(rel_type).alias("rel_type"),
+            F.lit(1).alias("stoichiometry"),
+            F.lit(1).alias("order"),
+            F.lit(None).cast("string").alias("conv_id"),
+            F.lit(RUN_TS).alias("created_ts"),
+            F.lit(PROVENANCE_STAGE).alias("stage"),
+        )
+
+    return _edge(PERSON_ID, INSTANCE_EDIT_ID, "author").unionByName(
+        _edge(INSTANCE_EDIT_ID, DB_INFO_ID, "created")
+    )
 
 
 def discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -462,9 +478,9 @@ def qa_consistency(
             ).alias(f"chk_{col}")
         )
     if not checks:
-        spark = df.sparkSession
-        return spark.createDataFrame(
-            [],
+        cols = ["SchemaClass", "Attribute", "Category", "Error", "violations"]
+        return df.sparkSession.createDataFrame(
+            pa.table({c: [] for c in cols}),
             "SchemaClass string, Attribute string, Category string, Error string, violations long",
         )
     wide = df.agg(*checks)  # single pass over the table, one agg per column

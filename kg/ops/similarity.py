@@ -429,6 +429,7 @@ def ivf_topk_at_scale(
     silently re-deriving a different matrix.
     """
     import numpy as np
+    import pyarrow as pa
 
     e = _fan_out(embeddings).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
@@ -459,17 +460,20 @@ def ivf_topk_at_scale(
     norms = np.linalg.norm(cents, axis=1)
     norms[norms == 0] = 1.0
     scaled = (cents / norms[:, None]).T
-    probe_rows = []
+    probe_rows = {"probe_id": [], "pv": [], "cell": []}
     for r in probes:
         v = np.array(r["v"], dtype="float64")
         order = np.argsort(-(v @ scaled), kind="stable")[:n_probe]
-        probe_rows.extend(
-            (int(r["vec_id"]), [float(x) for x in r["v"]], int(c)) for c in order
-        )
+        for c in order:
+            probe_rows["probe_id"].append(int(r["vec_id"]))
+            probe_rows["pv"].append([float(x) for x in r["v"]])
+            probe_rows["cell"].append(int(c))
     spark = embeddings.sparkSession
     d = int(cents.shape[1])
+    # Arrow table ⇒ JVM LocalRelation: the broadcast probe side needs no
+    # Python worker (a list of rows would be a Python RDD)
     pdf = spark.createDataFrame(
-        probe_rows, "probe_id long, pv array<double>, cell int"
+        pa.table(probe_rows), "probe_id long, pv array<double>, cell int"
     ).withColumn("_pnv", F.sqrt(dot(F.col("pv"), F.col("pv"), d)))
     cells = cells.withColumn("_nv", F.sqrt(dot(F.col("v"), F.col("v"), d)))
     cand = cells.join(

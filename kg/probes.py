@@ -9,8 +9,13 @@ bench scale (~0.3s per probe).  Two cases need no job at all:
 - a PLAIN parquet scan (optimized plan is a bare LogicalRelation, so no
   filter/projection can change the row count): sum the parquet FOOTER
   row counts driver-side, early-exiting once past the threshold;
-- a LOCAL relation (e.g. a mapping built by the driver union-find): the
-  row count is already in the plan.
+- a LOCAL relation: the row count is already in the plan.  Every table
+  the pipeline builds on the driver (the union-find mapping, the label
+  map) is passed to ``createDataFrame`` as an Arrow table, which is what
+  makes it a LocalRelation; a list of rows would be a LogicalRDD over a
+  Python RDD and take the fallback below.  (An Arrow table larger than
+  spark.sql.execution.arrow.localRelationThreshold becomes a JVM RDD of
+  Arrow batches: the fallback again, but still without Python workers.)
 
 Anything else — or any error — falls back to the bounded limit+count
 job, so the probe is never wrong, only sometimes cheaper.

@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half of physical RAM in whole GiB
+    (7g on a 15.7 GB host), so the local-mode JVM — driver and executors
+    in one heap — leaves room for the Python workers and the page cache.
+    A heap larger than RAM gets the JVM OOM-killed instead of collecting.
+    Hosts without ``/proc/meminfo`` get 24g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return "24g"
+    return f"{max(1, kb // (2 * 1024 * 1024))}g"
+
+
 def get_spark(
     app_name: str = "kg",
     parallelism: int | None = None,
@@ -24,6 +38,7 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     parallelism: local[N] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
+    Driver heap: $SPARK_GRAFT_DRIVER_MEM, else host_driver_memory().
     shuffle_partitions: defaults to parallelism (local rule of thumb —
     on a real cluster this would be ~2-3x total cores, or left to AQE
     coalescing which is enabled here).
@@ -50,7 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)

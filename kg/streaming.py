@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -180,7 +181,8 @@ def run_incremental(
         )
         if state["mapping"] is None:
             state["mapping"] = spark.createDataFrame(
-                [], "node string, canonical_id string"
+                pa.table({"node": [], "canonical_id": []}),
+                "node string, canonical_id string",
             )
         return state["mapping"]
 
@@ -215,7 +217,9 @@ def run_incremental(
 
         return {
             "epochs": 0,
-            "edges": spark.createDataFrame([], EDGES_SCHEMA),
+            "edges": spark.createDataFrame(
+                pa.table({c: [] for c in EDGES_SCHEMA.names}), EDGES_SCHEMA
+            ),
             "cc_stats": cc_stats,
             "edge_stats": edge_stats,
         }

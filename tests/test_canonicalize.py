@@ -138,12 +138,27 @@ def test_update_connected_components_empty_and_noop_deltas(spark):
     assert sorted(map(tuple, m2.collect())) == [("n", "m")]
 
 
+def _jobs_launched(spark, fn) -> int:
+    """Number of Spark jobs fn() launches (counted in the status store
+    under a job group of its own)."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_rows_at_most_probe_paths(spark, tmp_path):
     """r6: the bounded row-count probe must answer identically through
     its three paths — parquet footers (plain scan), local relation, and
     the limit+count fallback (filtered plan)."""
     from pyspark.sql import functions as F
 
+    from kg.canonicalize import _driver_union_find
     from kg.probes import rows_at_most
 
     p = str(tmp_path / "probe.parquet")
@@ -156,8 +171,17 @@ def test_rows_at_most_probe_paths(spark, tmp_path):
     n = filtered.count()
     assert rows_at_most(filtered, n) is True
     assert rows_at_most(filtered, n - 1) is False
-    # local relation (driver-built)
-    local = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    assert _jobs_launched(spark, lambda: rows_at_most(filtered, n)) >= 1
+    # local relation (driver-built): the union-find mapping of a 10-node
+    # chain; the probe reads its size from the plan and launches no job
+    chain = spark.read.parquet(p).where(F.col("id") < 9).select(
+        F.format_string("n%d", "id").alias("src"),
+        F.format_string("n%d", F.col("id") + 1).alias("dst"),
+    )
+    local = _driver_union_find(chain)
+    plan = local._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert _jobs_launched(spark, lambda: rows_at_most(local, 10)) == 0
     assert rows_at_most(local, 10) is True
     assert rows_at_most(local, 9) is False
 

@@ -162,3 +162,20 @@ def test_a2_decimal_packing_equals_window_on_edge_values(spark):
         )
     )
     assert packed == window_form
+
+
+def test_a2_packing_rejects_keys_outside_its_domain(spark, tmp_path):
+    """The decimal pack orders (date, orderkey) correctly only for a
+    non-null date and orderkey ≥ 0; a negative key must fail the query
+    rather than silently change the group's winner."""
+    import datetime as dt
+
+    from kg.entry_queries import _REGISTRY
+
+    o = spark.createDataFrame(
+        [(1, 5, dt.datetime(1998, 1, 1)), (1, -3, dt.datetime(1998, 1, 1))],
+        "o_custkey long, o_orderkey long, o_orderdate timestamp_ntz",
+    )
+    o.write.parquet(str(tmp_path / "orders.parquet"))
+    with pytest.raises(Exception, match="o_orderkey >= 0"):
+        _REGISTRY["a2_latest_top1_per_group"][0](spark, str(tmp_path)).collect()

@@ -8,7 +8,7 @@ including stoichiometry and order, and the QA constraints must hold.
 from __future__ import annotations
 
 from kg.oracle import oracle_edges, oracle_triples, precision_recall
-from kg.pipeline import run_pipeline, run_qa
+from kg.pipeline import release_pipeline, run_pipeline, run_qa
 
 
 def test_golden_triples_pr(spark, transcripts_df, catalog_df, alias_pairs_df,
@@ -68,11 +68,34 @@ def test_provenance_nodes_and_edges(spark, transcripts_df, catalog_df, alias_pai
 
 
 def test_release_pipeline_unpersists(spark, transcripts_df, catalog_df, alias_pairs_df):
-    from kg.pipeline import release_pipeline, run_pipeline
-
     res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
     res["edges"].count()
     assert res["raw_triples"].storageLevel.useMemory
     release_pipeline(res)
     assert not res["raw_triples"].storageLevel.useMemory
     assert not res["canonical_triples"].storageLevel.useMemory
+
+
+def test_driver_built_tables_are_local_relations(
+    spark, transcripts_df, catalog_df, alias_pairs_df
+):
+    """Python workers run only in the pandas extract: the tables the
+    pipeline builds on the driver (union-find mapping, label map) are JVM
+    LocalRelations and the provenance rows are literals, so no executed
+    plan scans a Python RDD (`Scan ExistingRDD` over a LogicalRDD)."""
+    from kg.canonicalize import connected_components
+
+    mapping = connected_components(alias_pairs_df)  # below the small-graph gate
+    plan = mapping._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
+    try:
+        for name in ("canonical_triples", "nodes", "edges"):
+            df = res[name]
+            df.collect()
+            qe = df._jdf.queryExecution()
+            assert "LogicalRDD" not in qe.optimizedPlan().toString(), name
+            assert "ExistingRDD" not in qe.executedPlan().toString(), name
+    finally:
+        release_pipeline(res)
